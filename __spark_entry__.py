@@ -8,6 +8,7 @@ where the semantics are SQL-expressible.
 
 from __future__ import annotations
 
+import importlib
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -22,50 +23,38 @@ def entry(spark: SparkSession) -> DataFrame:
     return q_customer_features(spark, SF0001)
 
 
-def _registries() -> list:
-    from pyspark_kmeans_spark.operators import relational
+REGISTRY_MODULES = (
+    "operators.relational",
+    "operators.dedup",
+    "operators.ingest",
+    "operators.similarity",
+    "operators.text",
+    "operators.multimodal",
+    "operators.analytics",
+    "operators.temporal",
+    "operators.curation",
+    "operators.graph",
+    "operators.tpch",
+    "operators.checks",
+    "operators.bpe",
+    "streaming.events",
+    "ml.queries",
+    "ml.quality",
+    "sources.bucketed",
+    "sources.partitioned",
+    "sources.sorted_layout",
+    "sources.zorder",
+)
 
-    mods = [relational]
-    for name in (
-        "dedup",
-        "ingest",
-        "similarity",
-        "text",
-        "multimodal",
-        "analytics",
-        "temporal",
-        "curation",
-        "graph",
-        "tpch",
-        "checks",
-        "bpe",
-    ):
-        try:
-            mods.append(
-                __import__(
-                    f"pyspark_kmeans_spark.operators.{name}", fromlist=[name]
-                )
-            )
-        except ImportError:
-            pass
-    for name in (
-        "streaming.events",
-        "ml.queries",
-        "ml.quality",
-        "sources.bucketed",
-        "sources.partitioned",
-        "sources.sorted_layout",
-        "sources.zorder",
-    ):
-        try:
-            mods.append(
-                __import__(
-                    f"pyspark_kmeans_spark.{name}", fromlist=[name.split(".")[-1]]
-                )
-            )
-        except ImportError:
-            pass
-    return mods
+
+def _registries() -> list:
+    """The modules whose QUERIES / ORACLES make up the registry.  An import
+    error propagates: a broken module must fail loudly, not silently drop
+    its queries from the registry."""
+    return [
+        importlib.import_module(f"pyspark_kmeans_spark.{name}")
+        for name in REGISTRY_MODULES
+    ]
 
 
 # Sweep priority (the driver caps its sweep at 50 entries, so ordering

@@ -14,6 +14,7 @@ from collections.abc import Callable
 from pyspark.ml.functions import array_to_vector, vector_to_array
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from pyspark_kmeans_spark.ml.features import prepare_features
 from pyspark_kmeans_spark.ml.kmeans import fit_kmeans, kmeans_scan, results_df
@@ -61,13 +62,18 @@ def q_standard_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_kmeans_centers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M3+M6+M7+S3: k-scan over the flagship 7-feature table; output in the
     reference's clustering_results layout (k, cluster, score, *features)."""
-    data = _flagship(spark, sf_dir)
-    scaled, _ = prepare_features(data, FLAGSHIP_FEATURES, handle_invalid="skip")
-    # X1 parity (pyspark_kmeans.py:12): the feature table is tiny relative to
-    # its shuffle partitioning (≤150 rows — events.user_id is bounded), so
-    # collapse partitions before the iterative fits instead of letting every
-    # k-means iteration schedule hundreds of near-empty tasks.
-    result = kmeans_scan(scaled.coalesce(8), k_min=2, k_max=4, seed=1)
+    # Persisted so the scaler fit and the scan read one materialization of
+    # the join lineage (the same shape as pipeline.run).
+    data = _flagship(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        scaled, _ = prepare_features(data, FLAGSHIP_FEATURES, handle_invalid="skip")
+        # X1 parity (pyspark_kmeans.py:12): the feature table is tiny relative
+        # to its shuffle partitioning (≤150 rows — events.user_id is bounded),
+        # so collapse partitions before the iterative fits instead of letting
+        # every k-means iteration schedule hundreds of near-empty tasks.
+        result = kmeans_scan(scaled.coalesce(8), k_min=2, k_max=4, seed=1)
+    finally:
+        data.unpersist()
     return results_df(spark, result, FLAGSHIP_FEATURES)
 
 

@@ -8,6 +8,13 @@ traceback — the reference sent none and noted the TODO at
 pyspark_kmeans.py:42-51).
 Cleanup (O3): optional spark.stop() in `finally`.
 
+Cache ownership: `run` persists the prepared feature table (the
+CSV→join→aggregate lineage) before the scaler fit, so the fit and the
+k-scan read one materialization of it, and unpersists it in `finally`.
+`kmeans_scan` owns the second cache, of the scaled `features` column
+alone, and releases it itself.  The k range is checked before any Spark
+work, inside the `try`, so a bad range still sends the failure email.
+
 Everything is parameterized (paths, k range, seed, reference date, email
 endpoints, partition count) where the reference hard-coded values.
 """
@@ -18,10 +25,15 @@ import traceback
 from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
+from pyspark.storagelevel import StorageLevel
 
 from pyspark_kmeans_spark import reporting
 from pyspark_kmeans_spark.ml.features import prepare_features
-from pyspark_kmeans_spark.ml.kmeans import kmeans_scan, save_clustering_results
+from pyspark_kmeans_spark.ml.kmeans import (
+    check_k_range,
+    kmeans_scan,
+    save_clustering_results,
+)
 from pyspark_kmeans_spark.operators.segmentation import (
     COMPAT_FEATURES,
     COMPAT_REFERENCE_DATE,
@@ -61,7 +73,9 @@ def run(
 ) -> dict:
     """O1-O3.  Returns {'status', 'best_k', 'silhouette', 'report'} on
     success; sends a failure email and re-raises on error."""
+    persisted = None
     try:
+        check_k_range(config.k_min, config.k_max)
         d = config.data_dir
         users = read_csv(spark, f"{d}/users.csv", USERS_SCHEMA)
         buys = read_csv(spark, f"{d}/buy-clicks.csv", BUY_CLICKS_SCHEMA)
@@ -74,7 +88,8 @@ def run(
         )
         if config.feature_cols:
             features = config.feature_cols
-        scaled, _ = prepare_features(data, features, handle_invalid="skip")
+        persisted = data.persist(StorageLevel.MEMORY_AND_DISK)
+        scaled, _ = prepare_features(persisted, features, handle_invalid="skip")
         if config.num_partitions > 0:
             scaled = scaled.coalesce(config.num_partitions)  # X1 compat
 
@@ -129,5 +144,7 @@ def run(
                 pass
         raise
     finally:
+        if persisted is not None:
+            persisted.unpersist()
         if stop_spark:
             spark.stop()

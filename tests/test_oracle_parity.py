@@ -70,3 +70,20 @@ def test_rows_only(name, spark, sf_dir):
 def test_entry_smoke(spark):
     df = entrymod.entry(spark)
     assert df.count() > 0
+
+
+def test_every_registry_module_contributes_queries():
+    mods = entrymod._registries()
+    assert len(mods) == len(entrymod.REGISTRY_MODULES)
+    for mod in mods:
+        assert getattr(mod, "QUERIES", {}), f"{mod.__name__} contributes no query"
+
+
+def test_registry_import_error_propagates(monkeypatch):
+    monkeypatch.setattr(
+        entrymod,
+        "REGISTRY_MODULES",
+        (*entrymod.REGISTRY_MODULES, "operators.no_such_module"),
+    )
+    with pytest.raises(ImportError):
+        entrymod.queries()

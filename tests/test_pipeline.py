@@ -6,11 +6,13 @@ from __future__ import annotations
 import csv
 import datetime
 import os
+import threading
 
 import pytest
 
 from pyspark_kmeans_spark import reporting
 from pyspark_kmeans_spark.pipeline import PipelineConfig, run
+from tests.spark_jobs import jobs_since, next_job_id, persistent_rdd_ids
 
 
 class FakeTransport:
@@ -117,6 +119,99 @@ def test_pipeline_failure_email(spark, tmp_path):
     assert transport.sent[0]["Subject"] == "ERROR: Kmeans Spark Scanning Failed!"
     # unlike the reference, the traceback is included
     assert "Traceback" in transport.sent[0].get_content()
+
+
+def test_pipeline_rejects_bad_k_range_before_any_spark_work(spark, data_dir, tmp_path):
+    sc = spark.sparkContext
+    transport = FakeTransport()
+    cfg = PipelineConfig(
+        data_dir=data_dir,
+        results_path=str(tmp_path / "r"),
+        models_dir=str(tmp_path / "m"),
+        k_min=6,
+        k_max=2,
+    )
+    first = next_job_id(sc)
+    with pytest.raises(ValueError, match="invalid k range"):
+        run(spark, cfg, email_transport=transport)
+    assert jobs_since(sc, first) == []
+    assert len(transport.sent) == 1
+    assert transport.sent[0]["Subject"] == "ERROR: Kmeans Spark Scanning Failed!"
+
+
+def test_pipeline_releases_caches_and_threads(spark, data_dir, tmp_path, monkeypatch):
+    """Nothing stays persisted and no scan worker stays alive, both after a
+    successful run and after a run whose scan fails for one k while
+    another k is still fitting; the failure reaches the email."""
+    from pyspark_kmeans_spark.ml import kmeans
+
+    sc = spark.sparkContext
+    before = persistent_rdd_ids(sc)
+
+    def config(tag):
+        return PipelineConfig(
+            data_dir=data_dir,
+            results_path=str(tmp_path / f"results_{tag}.csv"),
+            models_dir=str(tmp_path / f"models_{tag}"),
+            k_min=2,
+            k_max=3,
+            num_partitions=4,
+        )
+
+    def scan_threads():
+        return [t for t in threading.enumerate() if t.name.startswith("kmeans_scan")]
+
+    assert run(spark, config("ok"), email_transport=FakeTransport())["status"] == "ok"
+    assert persistent_rdd_ids(sc) == before
+    assert scan_threads() == []
+
+    real_fit = kmeans.fit_kmeans
+    k2_started = threading.Event()
+
+    def fit_or_fail(data, k, **kwargs):
+        if k == 3:
+            assert k2_started.wait(timeout=60)
+            raise RuntimeError("planted fit failure for k=3")
+        k2_started.set()
+        return real_fit(data, k, **kwargs)
+
+    monkeypatch.setattr(kmeans, "fit_kmeans", fit_or_fail)
+    transport = FakeTransport()
+    with pytest.raises(RuntimeError, match="planted fit failure"):
+        run(spark, config("fail"), email_transport=transport)
+    assert persistent_rdd_ids(sc) == before
+    assert scan_threads() == []
+    assert len(transport.sent) == 1
+    assert "planted fit failure for k=3" in transport.sent[0].get_content()
+
+
+# Spark jobs one pipeline.run takes on the module's fixture (k 2..3):
+# measured 48, and 55 before the feature table was persisted once.  A
+# second run of the CSV→join→aggregate lineage, or scan jobs that leave
+# the caller's job group, break this test.
+PIPELINE_JOB_BUDGET = 48
+
+
+def test_pipeline_spark_job_budget(spark, data_dir, tmp_path):
+    sc = spark.sparkContext
+    cfg = PipelineConfig(
+        data_dir=data_dir,
+        results_path=str(tmp_path / "results.csv"),
+        models_dir=str(tmp_path / "models"),
+        k_min=2,
+        k_max=3,
+        num_partitions=4,
+    )
+    first = next_job_id(sc)
+    sc.setJobGroup("pipeline-job-budget", "pipeline.run")
+    try:
+        run(spark, cfg, email_transport=FakeTransport())
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = jobs_since(sc, first)
+    assert {group for _, group, _ in jobs} == {"pipeline-job-budget"}
+    assert len(jobs) <= PIPELINE_JOB_BUDGET
 
 
 def test_spark_native_report_forms(spark, sf_dir):
